@@ -12,8 +12,10 @@ def apply_engine_conf(spark) -> None:
     """Set required runtime conf on an existing SparkSession.
 
     spark.sql.unionOutputPartitioning=false — Spark 4.1's union output
-    partitioning propagation mis-plans the update pipeline's nested
-    union -> distinct -> join shape when broadcast joins are disabled:
+    partitioning propagation mis-plans a nested union -> distinct -> join
+    shape (the update pipeline's plan before its change-sized sets became
+    broadcast sides; pinned in tests/test_conf.py) when broadcast joins
+    are disabled:
     UnionExec claims the children's common HashPartitioning(N) but
     SQLPartitioningAwareUnionRDD materializes mismatched child partition
     counts once unions nest, and the downstream SortMergeJoin dies with

@@ -111,15 +111,15 @@ def way_cells(way_bbox: DataFrame, buffer: float = 0.05,
 
 
 def node_cells(nodes: DataFrame, way_refs: DataFrame, wcells: DataFrame,
-               buffer: float = 0.05, max_level: int = 18,
-               native: bool = True) -> DataFrame:
+               buffer: float = 0.05, max_level: int = 18) -> DataFrame:
     """Node cell = Common over parent-way cells, falling back to the node's
     own point-box cell Calculate((lon,lat,lon+1,lat+1), buffer, 18)
     (resortwaynodes.go:696-709).
 
     The Common fold runs as three native min/max aggregates plus a bit-math
     finish (SURVEY.md §7.4) — associative, so map-side partials absorb hot
-    nodes.  The fallback descent is fully native when native=True.
+    nodes.  The fallback is always the Arrow NumPy kernel
+    (cell_of_bbox_udf).
     """
     parent = with_common_finish(
         way_refs.join(wcells, "way_id").groupBy("ref").agg(*common_agg("cell")),

@@ -81,8 +81,12 @@ def with_tag_rewrite(df: DataFrame, which: str = "way",
                        iteration order), layer*10, bridge/tunnel +/-1,
                        explicit z_order override
 
-    All hot-path columns are pure Catalyst expressions (stepped
-    withColumns).  JSON escaping: the native fold emits values verbatim,
+    All hot-path columns are pure Catalyst expressions: one packed struct
+    of everything read from the tags map, then exactly two projection
+    layers above it (see the comments in the body — re-stepping them into
+    per-column withColumns re-inlines the tags expression per consumer, a
+    measured 17x blowup).  Pre-existing columns named like an output are
+    replaced.  JSON escaping: the native fold emits values verbatim,
     which equals json.dumps output only for printable-ASCII payloads
     without " or \\.  Rows whose folded keys/values fall outside that set
     are detected natively (one rlike over the fold entries) and routed
@@ -189,7 +193,7 @@ def with_tag_rewrite(df: DataFrame, which: str = "way",
         f"map('other_tags', coalesce({t}_jesc, {pk}.json))) "
         f"else {pk}.kept end"
     )
-    extra = [F.expr(tags_out_sql).alias("tags_out")]
+    extra = {"tags_out": F.expr(tags_out_sql)}
     if which == "way":
         # z-order over the REWRITTEN tags == z-order over the kept map:
         # find_zorder only reads highway/railway/layer/bridge/tunnel/
@@ -199,10 +203,12 @@ def with_tag_rewrite(df: DataFrame, which: str = "way",
         # tags null makes both maps null).  Reading the materialized kept
         # field avoids re-inlining the tags_out construction into the 8
         # element_at references of the z-order chain.
-        extra.append(F.expr(_zorder_sql(f"{pk}.kept")).alias("z_order"))
-        extra.append(F.col(f"{pk}.poly").alias("is_poly"))
-    extra.append(F.col(f"{pk}.feat").alias("is_feature"))
-    df = df.select("*", *extra)
+        extra["z_order"] = F.expr(_zorder_sql(f"{pk}.kept"))
+        extra["is_poly"] = F.col(f"{pk}.poly")
+    extra["is_feature"] = F.col(f"{pk}.feat")
+    # output names replace same-named input columns, as withColumn would
+    df = df.select(*[c for c in df.columns if c not in extra],
+                   *[v.alias(k) for k, v in extra.items()])
     return df.drop(*[c for c in df.columns if c.startswith(t)])
 
 

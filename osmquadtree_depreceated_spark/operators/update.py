@@ -2,16 +2,20 @@
 
 Reference semantics:
   * filterLastObj — keep only the newest version of each element in a change
-    batch (/root/reference/update/update.go:69-110);
+    batch (reference update/update.go:69-110);
   * MergeOrigAndChange — apply a merged change stream to the base stream
-    with Delete/Modify/Create semantics (/root/reference/change/
+    with Delete/Modify/Create semantics (reference change/
     mergechange.go:18-65): Delete drops the base row, Modify/Create replace
     it, Create of an unseen key inserts.
 
-Both are pure relational ops: a window dedup and a full-outer join — at
-production scale the same semantics run as `MERGE INTO` against the
-snapshot-versioned table (plans/lineage.py), reading only affected cell
-partitions (update.go:343-472)."""
+Both are pure relational ops: a window dedup over the change batch, then
+`base ⋉̸ latest ∪ upserts` with the latest keys broadcast, so the base
+table is only probed, never shuffled.  calc_update_tiles follows the same
+rule for every set it derives from a change batch (update.go:343-472 reads
+only the affected elements): each change-sized set is computed once per
+call and every base-sized table is probed against it through a broadcast
+semi/anti join.  A change batch must therefore fit in a broadcast — the
+same bound `asof_lookup` states for its dimension."""
 
 from __future__ import annotations
 
@@ -35,30 +39,39 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
     full recompute over the merged input (the q33 oracle checks exactly
     that).
 
-    Dataflow (every step a semi/anti-join or aggregation — the change
-    batch is tiny relative to the base, so each stage touches only the
-    affected partitions; with cell-partitioned snapshot tables the
-    anti/union merge is an Iceberg MERGE INTO):
+    Dataflow.  Sets marked * are change-sized and materialized once per
+    call (`localCheckpoint(eager=True)`, so the call runs a few small
+    eager jobs); every join against a base table (nodes, way_refs,
+    way_cells_df, node_cells_df) broadcasts the change-sized side, so no
+    base table is shuffled:
 
-      1. merged nodes      = Delete/Modify/Create semantics (mergechange.go)
-      2. affected ways     = ways referencing any changed node (FindTiles'
-                             id -> tile lookup, here id -> way semi-join)
-      3. their cells       = bbox over merged locations -> buffered descent
+      1. latest change*    = newest change per node (filterLastObj);
+                             merged nodes = nodes ⋉̸ latest ∪ upserts
+                             (mergechange.go)
+      2. affected ways*    = ways referencing any changed node (FindTiles'
+                             id -> tile lookup, here id -> way semi-join),
+                             and their refs*
+      3. affected nodes*   = changed nodes + every node of an affected way,
+                             minus deletions (update.go:459-472 nqts), and
+                             their merged locations*
+      4. new way cells*    = bbox over merged locations -> buffered descent
                              (update.go:412-457); ways left with no nodes
                              drop (matching the full-recompute pipeline)
-      4. affected nodes    = changed nodes + every node of an affected way
-                             (update.go:459-472 nqts)
-      5. their cells       = Common over parent-way cells from the MERGED
-                             way-cell table, point-box fallback
-      6. merged cell tables = old (anti-join affected) UNION new
+      5. new node cells    = Common over parent-way cells — the parents'
+                             refs* probe way_refs, their cells come from the
+                             merged way cells — with point-box fallback
+      6. merged cell tables = base ⋉̸ affected ∪ new
       7. affected tiles    = distinct cell_round(old + new cells of touched
                              elements, group_level) — the tile set a tiled
                              store must rewrite
 
+    A change batch must fit in a broadcast (the bound `asof_lookup`
+    states); the base tables need not.
+
     node_changes: (node_id, seq, change_type in delete/modify/create, lon,
     lat).  Returns dict(nodes, way_cells, node_cells, affected_ways,
     affected_nodes, affected_tiles, missing_refs) — missing_refs is the
-    LAZY anti-join DataFrame of affected-way members with no location
+    lazy anti-join DataFrame of affected-way members with no location
     after the merge (count it to get the reference's guard number; it is
     only counted internally when missing_node_cap is set).  With
     `store`, the merged cell tables
@@ -69,46 +82,55 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
     from .calcqts import node_cells as _node_cells
     from .calcqts import way_bboxes, way_cells as _way_cells
 
-    merged_nodes = merge_changes(
-        nodes, node_changes, "node_id", val_cols=("lon", "lat")
-    )
-    changed = latest_version(
-        node_changes,
-        ["node_id"],
-        # full-tuple descending order: equal-seq duplicate changes resolve
-        # to the same winner as the streaming stateful op's (seq,
-        # change_type, value...) tuple max — batch == incremental on ties
-        [("seq", "desc"), ("change_type", "desc"),
-         ("lon", "desc"), ("lat", "desc")],
-    )
-    changed_ids = changed.select("node_id").distinct()
+    def once(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=True)
+
+    def as_ref(ids: DataFrame) -> DataFrame:
+        return F.broadcast(ids.select(F.col("node_id").alias("ref")))
+
+    last = once(latest_changes(node_changes, "node_id",
+                               val_cols=("lon", "lat")))
+    merged_nodes = _apply_latest(nodes, last, "node_id", "change_type",
+                                 ("lon", "lat"))
+    changed_ids = last.select("node_id")
     deleted_ids = (
-        changed.filter(F.col("change_type") == CT_DELETE)
-        .select("node_id").distinct()
+        last.filter(F.col("change_type") == CT_DELETE).select("node_id")
     )
 
-    affected_ways = (
-        way_refs.join(
-            changed_ids, way_refs["ref"] == changed_ids["node_id"],
-            "left_semi",
-        )
+    affected_ways = once(
+        way_refs.join(as_ref(changed_ids), "ref", "left_semi")
         .select("way_id")
         .distinct()
     )
-    aff_refs = way_refs.join(affected_ways, "way_id", "left_semi")
+    aff_refs = once(
+        way_refs.join(F.broadcast(affected_ways), "way_id", "left_semi")
+    )
+    affected_nodes = once(
+        aff_refs.select(F.col("ref").alias("node_id"))
+        .unionByName(changed_ids)
+        .distinct()
+        .join(F.broadcast(deleted_ids), "node_id", "left_anti")
+    )
+    # every node whose cell is rewritten or dropped (disjoint union)
+    touched_nodes = affected_nodes.unionByName(deleted_ids)
+    # merged location of every affected node; a deleted node has none
+    aff_locs = once(
+        merged_nodes.join(F.broadcast(affected_nodes), "node_id",
+                          "left_semi")
+    )
     # Missing-node accounting (update.go:425-437): the reference logs
     # every way member whose location is absent after the merge and
     # PANICS at 100 — a corruption guard on the location cache.  The
     # distributed analogue is an anti-join over the affected subset only
-    # (O(changed), not O(base)), returned LAZILY as the `missing_refs`
+    # (O(changed), not O(base)), returned lazily as the `missing_refs`
     # DataFrame — no extra Spark action unless a cap is enforced or the
     # caller counts it.  Cap defaults to None because legitimately
     # deleting a still-referenced node also counts as missing (in the
     # reference too) and synthetic fixtures do that freely; production
     # runs against a trusted cache pass cap=100.
     missing_refs = aff_refs.join(
-        merged_nodes, aff_refs["ref"] == merged_nodes["node_id"],
-        "left_anti",
+        F.broadcast(aff_locs.select(F.col("node_id").alias("ref"))),
+        "ref", "left_anti",
     )
     if missing_node_cap is not None:
         n_missing = missing_refs.count()
@@ -120,48 +142,39 @@ def calc_update_tiles(nodes: DataFrame, way_refs: DataFrame,
                 "update.go:432-437) — location cache and change feed "
                 "disagree"
             )
-    new_wc = _way_cells(
-        way_bboxes(aff_refs, merged_nodes, salt_buckets=0),
+    new_wc = once(_way_cells(
+        way_bboxes(aff_refs, F.broadcast(aff_locs), salt_buckets=0),
         buffer, max_level,
-    )
+    ))
     merged_wc = (
-        way_cells_df.join(affected_ways, "way_id", "left_anti")
+        way_cells_df.join(F.broadcast(affected_ways), "way_id", "left_anti")
         .unionByName(new_wc)
     )
 
-    affected_nodes = (
-        aff_refs.select(F.col("ref").alias("node_id"))
-        .unionByName(changed_ids)
-        .distinct()
-        .join(deleted_ids, "node_id", "left_anti")
+    # parents of affected nodes only; Common over their MERGED way cells
+    parent_refs = once(
+        way_refs.join(as_ref(affected_nodes), "ref", "left_semi")
     )
-    # parents of affected nodes only; Common over MERGED way cells
-    parent_refs = way_refs.join(
-        affected_nodes, way_refs["ref"] == affected_nodes["node_id"],
+    parent_wc = merged_wc.join(
+        F.broadcast(parent_refs.select("way_id").distinct()), "way_id",
         "left_semi",
     )
     new_nc = _node_cells(
-        merged_nodes.join(affected_nodes, "node_id", "left_semi"),
-        parent_refs, merged_wc, buffer, max_level,
+        aff_locs, F.broadcast(parent_refs), parent_wc, buffer, max_level,
     )
     merged_nc = (
-        node_cells_df.join(
-            affected_nodes.unionByName(deleted_ids).distinct(),
-            "node_id", "left_anti",
-        )
+        node_cells_df.join(F.broadcast(touched_nodes), "node_id",
+                           "left_anti")
         .unionByName(new_nc)
     )
 
     old_cells = (
-        way_cells_df.join(affected_ways, "way_id", "left_semi")
+        way_cells_df.join(F.broadcast(affected_ways), "way_id", "left_semi")
         .select("cell")
         .unionByName(
-            node_cells_df.join(
-                changed_ids.unionByName(
-                    affected_nodes.select("node_id")
-                ).distinct(),
-                "node_id", "left_semi",
-            ).select("cell")
+            node_cells_df.join(F.broadcast(touched_nodes), "node_id",
+                               "left_semi")
+            .select("cell")
         )
     )
     new_cells = new_wc.select("cell").unionByName(new_nc.select("cell"))
@@ -348,37 +361,49 @@ def asof_lookup(left: DataFrame, right_small: DataFrame, key_cols,
     )
 
 
+def latest_changes(changes: DataFrame, key: str,
+                   ct_col: str = "change_type", seq_col: str = "seq",
+                   val_cols=("val",)) -> DataFrame:
+    """Newest change per key (filterLastObj).  Equal-seq ties break by the
+    full (seq, change_type, values...) tuple descending — the identical
+    total order the streaming filterLastObj (streaming/changes.py
+    stream_latest_version) applies, so batch and incremental paths always
+    pick the same winner."""
+    return latest_version(
+        changes, [key],
+        [(seq_col, "desc"), (ct_col, "desc")]
+        + [(v, "desc") for v in val_cols],
+    )
+
+
 def merge_changes(base: DataFrame, changes: DataFrame, key: str,
                   ct_col: str = "change_type", seq_col: str = "seq",
                   val_cols=("val",)) -> DataFrame:
     """Apply a change batch to a base table (mergechange.go:18-65).
 
-    base: (key, *val_cols); changes: (key, seq, change_type, *val_cols).
-    The newest change per key wins (filterLastObj), then:
-      delete -> row removed; modify/create -> change values replace base;
-      keys without changes pass through.
-    """
-    # equal-seq ties break by the full (seq, change_type, values...) tuple
-    # descending — the identical total order the streaming filterLastObj
-    # (streaming/changes.py stream_latest_version) applies, so batch and
-    # incremental paths always pick the same winner
-    last = latest_version(
-        changes, [key],
-        [(seq_col, "desc"), (ct_col, "desc")]
-        + [(v, "desc") for v in val_cols],
+    base: (key, *val_cols) with unique keys; changes: (key, seq,
+    change_type, *val_cols).  The newest change per key wins
+    (latest_changes), then:
+      delete -> row removed; modify/create -> change values replace base
+      (or insert, for an unseen key); keys without changes pass through.
+    A newest change of any other change_type is a no-op.
+
+    Plan: `base ⋉̸ latest ∪ upserts`, the latest keys broadcast — the base
+    side is only scanned and filtered, never shuffled, so the change batch
+    must fit in a broadcast."""
+    return _apply_latest(
+        base, latest_changes(changes, key, ct_col, seq_col, val_cols),
+        key, ct_col, val_cols,
     )
-    merged = base.alias("b").join(
-        last.alias("c"), F.col(f"b.{key}") == F.col(f"c.{key}"), "full_outer"
+
+
+def _apply_latest(base: DataFrame, last: DataFrame, key: str, ct_col: str,
+                  val_cols) -> DataFrame:
+    """merge_changes over an already-deduplicated change set `last`."""
+    applied = last.filter(F.col(ct_col).isin(CT_DELETE, CT_MODIFY, CT_CREATE))
+    upserts = applied.filter(F.col(ct_col) != CT_DELETE)
+    return (
+        base.select(key, *val_cols)
+        .join(F.broadcast(applied.select(key)), key, "left_anti")
+        .unionByName(upserts.select(key, *val_cols))
     )
-    keep = F.col(f"c.{ct_col}").isNull() | (F.col(f"c.{ct_col}") != CT_DELETE)
-    out_cols = [
-        F.coalesce(F.col(f"b.{key}"), F.col(f"c.{key}")).alias(key)
-    ] + [
-        F.when(
-            F.col(f"c.{ct_col}").isin(CT_MODIFY, CT_CREATE), F.col(f"c.{v}")
-        )
-        .otherwise(F.col(f"b.{v}"))
-        .alias(v)
-        for v in val_cols
-    ]
-    return merged.filter(keep).select(*out_cols)

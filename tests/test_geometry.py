@@ -241,6 +241,34 @@ class TestTagRewrite:
             assert dict(r["tags_out"] or {}) == newtags, c
             assert r["is_feature"] == isfeat, c
 
+    def test_rewrite_replaces_preexisting_output_columns(self, spark):
+        """Input columns named like an output (tags_out, z_order, is_poly,
+        is_feature) are replaced, not duplicated."""
+        from osmquadtree_depreceated_spark.operators.geometry import (
+            with_tag_rewrite,
+        )
+
+        clean = spark.createDataFrame(
+            [(i, c) for i, c in enumerate(self.CASES)],
+            "id long, tags map<string,string>",
+        )
+        stale = clean.selectExpr(
+            "id", "tags", "map('stale', 'x') as tags_out",
+            "-1L as z_order", "cast(null as boolean) as is_poly",
+            "true as is_feature",
+        )
+        for which in ("way", "node"):
+            want = with_tag_rewrite(clean, which)
+            got = with_tag_rewrite(stale, which)
+            assert len(set(got.columns)) == len(got.columns), which
+            # a node rewrite derives no z_order/is_poly: those pass through
+            assert set(got.columns) == set(want.columns) | (
+                {"z_order", "is_poly"} if which == "node" else set()), which
+            cols = sorted(want.columns)
+            assert ({tuple(map(str, r)) for r in got.select(cols).collect()}
+                    == {tuple(map(str, r))
+                        for r in want.select(cols).collect()}), which
+
 
 @pytest.fixture(scope="module")
 def geo_data(spark):

@@ -81,6 +81,34 @@ def test_incremental_equals_full_and_touches_minimum(spark, base):
     assert all((t & 31) <= 12 for t in tiles)
 
 
+def test_update_plans_probe_base_by_broadcast(spark, base):
+    """Change-sized sets are materialized once and every base table is
+    only probed through a broadcast: after an action the final plans of
+    the merged cell tables hold no SortMergeJoin, and node_cells runs
+    exactly one Python UDF (the point-box fallback; the way-cell UDF ran
+    once, inside the materialized new way cells)."""
+    nodes, way_refs, wc, nc = (
+        df.localCheckpoint(eager=True) for df in base
+    )
+    changes = spark.createDataFrame(
+        [(1, 1, "modify", -5_500_000, 505_500_000),
+         (7, 1, "delete", None, None),
+         (100, 1, "create", 9_000_000, 519_000_000)],
+        "node_id long, seq long, change_type string, lon long, lat long",
+    )
+    out = calc_update_tiles(nodes, way_refs, wc, nc, changes)
+    plans = {}
+    for name in ("way_cells", "node_cells"):
+        df = out[name]
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # the adaptive plan prints its initial plan after the final one
+        plans[name] = plan.split("== Initial Plan ==")[0]
+        assert "SortMergeJoin" not in plans[name], plans[name]
+    assert plans["way_cells"].count("ArrowEvalPython") == 0
+    assert plans["node_cells"].count("ArrowEvalPython") == 1
+
+
 def test_store_commit_and_resume(spark, base, tmp_path):
     from osmquadtree_depreceated_spark.plans.lineage import SnapshotStore
 
